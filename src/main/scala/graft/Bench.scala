@@ -1,9 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.json4s.{JObject, JString}
+import org.json4s.jackson.JsonMethods
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Contention gate: same-code close samples have swung 31.8-52.6 s purely
     // with machine load (r15 closed at load_avg 6.5). A sample taken on a
     // busy box is not comparable round-over-round, so wait for the load to
@@ -24,14 +24,7 @@ object Bench {
     // close samples are self-describing (load_avg below is re-sampled later,
     // after warm-up, and reflects the bench's own load)
     val loadPreMeasure = loadBean.getSystemLoadAverage
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // Warm the session so the first timed query doesn't absorb one-time
     // startup: scheduler + codegen compiler + shuffle machinery + broadcast
     // exchange + window/session-window state paths + parquet reader. Round 1
@@ -141,17 +134,9 @@ object Bench {
     // tail of stdout, and the per-sample runs array pushed the line past it —
     // every BENCH_r*.json came back "parsed": null. The full line, runs
     // included, goes to the dated archive under bench/ instead.
-    // escape EVERY control char (Spark error text carries ANSI escapes),
-    // not just whitespace — one raw 0x1b would make the whole line
-    // unparseable, the exact "parsed": null failure this JSON exists to avoid
-    def jsonStr(s: String) = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val errJson = errors.map { case (k, v) => jsonStr(k) + ":" + jsonStr(v) }
-      .mkString("{", ",", "}")
+    // json4s escapes every control char (Spark error text carries ANSI
+    // escapes): one raw 0x1b would make the whole line unparseable
+    val errJson = JsonMethods.compact(JObject(errors.toList.map { case (k, v) => k -> JString(v) }))
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","reps":$reps,"errors":$errJson,"env":$envStamp}"""
     val archiveLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","reps":$reps,"errors":$errJson,"env":$envStamp,"runs":$runsJson}"""
     val stamp = java.time.LocalDateTime.now()

@@ -52,6 +52,19 @@ object RenderSink {
     } finally zos.close()
   }
 
+  /** The colour breaks `(lo, step)` a selection renders with: `nbins` equal
+    * bins over the selection's exact value range, the reference's colour map
+    * (`Gddp.scala:230-236`), or over `(0, 1)` when it holds no value. The
+    * min/max is one metadata-sized aggregate.
+    */
+  def valueBreaks(sel: DataFrame, nbins: Int): (Double, Double) = {
+    val stats = sel.agg(min("value"), max("value")).collect()(0)
+    val (lo, hi) =
+      if (stats.isNullAt(0)) (0.0, 1.0)
+      else (stats.getDouble(0), stats.getDouble(1))
+    (lo, math.max((hi - lo) / nbins, 1e-9))
+  }
+
   /** Writes `<outDir>/grid_<variable>_<yyyy-MM-dd>.png` per timestep.
     * `sel` needs columns (variable, ts, y, x, value); grid dims are taken
     * from the y/x extent of each image's own cells.

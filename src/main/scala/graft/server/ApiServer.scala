@@ -56,8 +56,12 @@ class ApiServer(spark: SparkSession, port: Int = 0,
   /** Parse the reference's request JSON into the engine's QueryRequest. */
   private[server] def parseRequest(body: String): QueryRequest = {
     val j = JsonMethods.parse(body)
-    val JString(dates) = (j \ "selectDate"): @unchecked
-    val JString(vars) = (j \ "variables"): @unchecked
+    def text(field: String): String = j \ field match {
+      case JString(s) => s
+      case other => throw new IllegalArgumentException(s"$field: expected a string, got $other")
+    }
+    val dates = text("selectDate")
+    val vars = text("variables")
     val ring = (j \ "geoJson" \ "coordinates") match {
       case JArray(List(JArray(points))) => points.map {
         case JArray(List(lon, lat)) =>
@@ -66,7 +70,10 @@ class ApiServer(spark: SparkSession, port: Int = 0,
       }
       case other => throw new IllegalArgumentException(s"bad coordinates: $other")
     }
-    val Array(start, end) = dates.split(",").map(_.trim)
+    val (start, end) = dates.split(",").map(_.trim) match {
+      case Array(s, e) => (s, e)
+      case _ => throw new IllegalArgumentException(s"selectDate: expected \"start,end\", got \"$dates\"")
+    }
     QueryRequest(vars.split(",").map(_.trim).toSeq, start, end, ring)
   }
 
@@ -82,14 +89,7 @@ class ApiServer(spark: SparkSession, port: Int = 0,
     val sel = GridQuery.select(withFileColumn(grid(spark)), req)
       .select("variable", "ts", "y", "x", "value")
     val nbins = 10
-    // reference derives the color map from the selection's value range
-    // (Gddp.scala:230-236, StreamingHistogram breaks); min/max over the
-    // selection is one metadata-sized aggregate
-    val stats = sel.agg(min("value"), max("value")).collect()(0)
-    val (lo, hi) =
-      if (stats.isNullAt(0)) (0.0, 1.0)
-      else (stats.getDouble(0), stats.getDouble(1))
-    val step = math.max((hi - lo) / nbins, 1e-9)
+    val (lo, step) = RenderSink.valueBreaks(sel, nbins)
     val tmp = Files.createTempDirectory("graft-render").toFile
     try {
       RenderSink.writePngs(sel, tmp.getAbsolutePath, lo, step, nbins)
@@ -132,16 +132,9 @@ class ApiServer(spark: SparkSession, port: Int = 0,
     val rows = df.limit(sqlRowCap + 1).toJSON.collect()
     val truncated = rows.length > sqlRowCap
     val kept = if (truncated) rows.take(sqlRowCap) else rows
-    // full JSON string escaping for column names — Spark permits aliases
-    // with control characters, and one raw newline would break the payload
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val cols = df.columns.map(jstr)
-    s"""{"columns":[${cols.mkString(",")}],"rowCount":${kept.length},""" +
+    // Spark permits aliases with control characters; json4s escapes them
+    val cols = JsonMethods.compact(JArray(df.columns.toList.map(JString(_))))
+    s"""{"columns":$cols,"rowCount":${kept.length},""" +
       s""""truncated":$truncated,"rows":[${kept.mkString(",")}]}"""
   }
 
@@ -152,32 +145,29 @@ class ApiServer(spark: SparkSession, port: Int = 0,
     try ex.getResponseBody.write(body) finally ex.close()
   }
 
+  /** A JSON error body naming the exception and what failed. */
+  private def fail(ex: HttpExchange, code: Int, e: Throwable): Unit = {
+    val kind = if (code == 400) "Bad Request" else "Server Error"
+    val what = Option(e.getMessage).fold("")(m => s": $m")
+    val body = JObject("message" -> JString(s"$kind: ${e.getClass.getSimpleName}$what"))
+    respond(ex, code, "application/json", JsonMethods.compact(body).getBytes("UTF-8"))
+  }
+
   def start(): Int = {
     server.createContext("/getBoundary", (ex: HttpExchange) =>
       try respond(ex, 200, "application/json", boundary().getBytes("UTF-8"))
-      catch {
-        case e: Exception =>
-          respond(ex, 500, "application/json",
-            s"""{"message": "Server Error: ${e.getClass.getSimpleName}"}""".getBytes("UTF-8"))
-      })
+      catch { case e: Exception => fail(ex, 500, e) })
     server.createContext("/fetchResult", (ex: HttpExchange) =>
       try {
         val body = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
         // malformed request JSON is the client's fault (400); a failure while
         // executing a well-formed request is the server's (500)
         val req = try parseRequest(body) catch {
-          case e: Exception =>
-            respond(ex, 400, "application/json",
-              s"""{"message": "Bad Request: ${e.getClass.getSimpleName}"}""".getBytes("UTF-8"))
-            null
+          case e: Exception => fail(ex, 400, e); null
         }
         if (req != null)
           respond(ex, 200, "application/zip", fetchResult(req))
-      } catch {
-        case e: Exception =>
-          respond(ex, 500, "application/json",
-            s"""{"message": "Server Error: ${e.getClass.getSimpleName}"}""".getBytes("UTF-8"))
-      })
+      } catch { case e: Exception => fail(ex, 500, e) })
     server.createContext("/sql", (ex: HttpExchange) =>
       try {
         val body = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
@@ -196,12 +186,8 @@ class ApiServer(spark: SparkSession, port: Int = 0,
         // names, or a write statement — all pre-execution
         case e @ (_: IllegalArgumentException |
                   _: org.apache.spark.sql.catalyst.parser.ParseException |
-                  _: org.apache.spark.sql.AnalysisException) =>
-          respond(ex, 400, "application/json",
-            s"""{"message": "Bad Request: ${e.getClass.getSimpleName}"}""".getBytes("UTF-8"))
-        case e: Exception =>
-          respond(ex, 500, "application/json",
-            s"""{"message": "Server Error: ${e.getClass.getSimpleName}"}""".getBytes("UTF-8"))
+                  _: org.apache.spark.sql.AnalysisException) => fail(ex, 400, e)
+        case e: Exception => fail(ex, 500, e)
       })
     server.start()
     server.getAddress.getPort
@@ -213,15 +199,7 @@ class ApiServer(spark: SparkSession, port: Int = 0,
 object ApiServer {
   /** Standalone entry: `runMain graft.server.ApiServer [port]`. */
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-api")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     val port = new ApiServer(spark, args.headOption.map(_.toInt).getOrElse(8080)).start()
     println(s"graft API listening on http://127.0.0.1:$port")
     Thread.currentThread().join()

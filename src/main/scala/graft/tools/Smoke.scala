@@ -1,12 +1,8 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 /** Dev smoke for the driver's entry contract. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     val e = graft.SparkEntry.entry(spark)
     println("ENTRY_ROWS=" + e.count())
     println("ENTRY_COLS=" + e.columns.mkString(","))

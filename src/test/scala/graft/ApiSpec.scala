@@ -4,6 +4,8 @@ import java.io.ByteArrayInputStream
 import java.net.{HttpURLConnection, URI}
 import java.util.zip.ZipInputStream
 
+import org.json4s.{JArray, JInt, JObject, JString}
+import org.json4s.jackson.JsonMethods
 import org.scalatest.funsuite.AnyFunSuite
 import graft.server.ApiServer
 
@@ -139,8 +141,11 @@ class ApiSpec extends AnyFunSuite {
 
   test("malformed request yields a 400, not a hung connection") {
     withServer { port =>
-      val (code, _) = post(s"http://127.0.0.1:$port/fetchResult", """{"nope": 1}""")
+      val (code, body) = post(s"http://127.0.0.1:$port/fetchResult", """{"nope": 1}""")
       assert(code == 400)
+      // the body is JSON and says which field was wrong
+      val JString(message) = JsonMethods.parse(new String(body, "UTF-8")) \ "message": @unchecked
+      assert(message.startsWith("Bad Request") && message.contains("selectDate"), message)
     }
   }
 
@@ -240,6 +245,19 @@ class ApiSpec extends AnyFunSuite {
       assert(new java.io.File(s"$dir/out").listFiles() == null &&
         new java.io.File(s"$dir/tbl").listFiles() == null,
         "a rejected INSERT left files behind")
+    }
+  }
+
+  test("POST /sql escapes column names: quote, backslash, tab, newline, ESC") {
+    val alias = "a\"b\\c\td\ne\u001bf"
+    withServer { port =>
+      val query = JsonMethods.compact(JObject("query" -> JString(s"SELECT 1 AS `$alias`")))
+      val (code, body) = post(s"http://127.0.0.1:$port/sql", query)
+      val text = new String(body, "UTF-8")
+      assert(code == 200, text)
+      val json = JsonMethods.parse(text)
+      assert(json \ "columns" == JArray(List(JString(alias))), text)
+      assert(json \ "rows" == JArray(List(JObject(alias -> JInt(1)))), text)
     }
   }
 

@@ -37,4 +37,12 @@ class RenderSpec extends AnyFunSuite {
     // Kawartha bbox clips the 20×30 grid to a 6-wide × 3-tall patch
     assert(img.getWidth > 1 && img.getHeight > 1)
   }
+
+  test("colour breaks span the selection's exact value range, (0, 1) when empty") {
+    val s = spark
+    import s.implicits._
+    val sel = Seq(2.0, 12.0, 7.0).toDF("value")
+    assert(RenderSink.valueBreaks(sel, 10) == ((2.0, 1.0)))
+    assert(RenderSink.valueBreaks(sel.filter("value > 100"), 10) == ((0.0, 0.1)))
+  }
 }
